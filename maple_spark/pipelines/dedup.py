@@ -1082,7 +1082,10 @@ def _cross_dedup_batch_joins(
     # audited: cp6's guard held 2 copies, 0 ReusedExchange).  The
     # checkpoint is id-only fixed-width pairs bounded by band COLLISIONS
     # (never the increment), lazy so it materializes inside the timed
-    # execution, recomputed from the inputs on every run.
+    # execution, recomputed from the inputs on every run.  The LogicalRDD
+    # boundary also drops Spark's injected runtime Bloom on doc_id, a
+    # no-op here: it is built from the same filter-over-scan its
+    # application side already carries (OPTIMIZATION_r12.md §4).
     cand = checkpoint_df(
         nb.join(ref_buckets, ["band", "bucket"])
         .select("new_id", "ref_id")

@@ -404,7 +404,6 @@ def test_single_partition_exchanges_are_audited(spark):
                                         # (t19s/t20s have NONE: their total
                                         # is READ from the snapshot)
         "cp5_perplexity_mix": 1,        # t18's quota-total row over the gated set
-        "cp6_incremental_ingest": 1,    # injected runtime Bloom build (≤ numBits)
         "t26_dsir_select": 1,           # λ-model totals row over ≤ n_buckets rows
         "ts1_gapfill": 1,               # series min/max bounds row
     }
@@ -610,18 +609,19 @@ def test_cp6_incremental_ingest_plan(spark):
     lm_ref model joins — they run in the construction-time checkpoint
     job, which cp6's CONSTRUCT_TIMED bench clock covers), the guard
     reads the persisted dedup_ref snapshot scans, and the exchange
-    census shrank 18 → 5 hash exchanges, all increment-sided.  The ONE
-    SinglePartition is Spark's injected runtime Bloom-filter build
-    (bloom_filter_agg over the admitted-id side — bounded by numBits,
-    never relation-sized; it prunes the increment re-scan before
-    banding, guide §3.2), pinned 1:1 against the partial bloom agg so
-    a NEW unaudited SinglePartition still fails.  No CartesianProduct."""
+    census shrank 18 → 5 hash exchanges, all increment-sided.  No
+    SinglePartition exchange and no runtime Bloom filter: a Bloom
+    injected on doc_id is built from the same ``doc_id % 2 = 1``
+    filter-over-scan that its application scan already carries, so it
+    prunes no row (OPTIMIZATION_r12.md §4); the candidate checkpoint's
+    LogicalRDD boundary keeps Spark from injecting it.  Any
+    SinglePartition in cp6, Bloom build or otherwise, fails here and in
+    the blanket audit.  No CartesianProduct."""
     import __spark_entry__ as e
 
     plan = explain_str(e.cp6_incremental_ingest(spark, SF_DIR))
-    assert plan.count("SinglePartition") == plan.count(
-        "partial_bloom_filter_agg"
-    ) == 1
+    assert plan.count("SinglePartition") == 0
+    assert "bloom_filter_agg" not in plan
     assert "CartesianProduct" not in plan
     assert "cp6_dedup_ref" in plan
     assert plan.count("hashpartitioning") == 5
